@@ -5,15 +5,17 @@
 One client (this process) runs the workload's ops back to back on
 ``local[<cores>]`` Spark, in whole passes, until the passes have taken
 ``--seconds``. Inputs are generated from ``--seed`` into a scratch
-directory of the checkout before anything is timed. Every op's output is
-checked outside the timed region. The last stdout line is the result:
+directory of the checkout before anything is timed: the measured set, and
+a smaller set of the same shape for the set-up's warm-up pass. Every op's
+output is checked outside the timed region. The last stdout line is the
+result:
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
 
 With ``--trace 0`` the metrics are the end-to-end ones. With
-``--trace 1`` an untraced, a traced and an untraced pass run and the
-metrics are per layer, read from Spark's status store and ``/proc``
-around the calls the benchmark makes into the program. The line before
+``--trace 1`` the measured passes are traced and the metrics are per
+layer, read from Spark's status store and ``/proc`` around the calls the
+benchmark makes into the program. The line before
 the result is a run record: the derived session conf, input sizes, every
 set-up, pass and op time, and which check each op got. See
 ``perfbench/README.md`` for the workloads and metrics.
@@ -44,16 +46,13 @@ VIEW_OPS = (
     "v1_top_actors", "v2_top_genres", "v3_genre_ratings", "v4_top_actors_by_rating",
     "o7_top_n_per_group",
 )
-LLM_OPS = (
-    "gr_hits", "gr_pagerank", "ev_rfm", "emb_pca_power", "dd_minhash_lsh", "sim_knn_lsh",
-    "sim_knn_ivf",
-)
+LLM_OPS = ("gr_hits", "ev_rfm", "dd_minhash_lsh", "sim_knn_lsh", "sim_knn_ivf")
 WORKLOADS = {
     # the reference's ETL (pages of 20 movies: an initial load, incremental
     # batches, a rerun of the last batch), then its analytical views on
     # fixture tables at scale sf multiplied by key-shifted replicas
-    "reference": {"pages": 60, "batches": 1, "batch_pages": 20,
-                  "ops": VIEW_OPS, "sf": 0.03, "factor": 2},
+    "reference": {"pages": 20, "batches": 1, "batch_pages": 10,
+                  "ops": VIEW_OPS, "sf": 0.02, "factor": 2},
     "llm_ops": {"ops": LLM_OPS, "sf": 0.02, "factor": 1},
 }
 
@@ -63,6 +62,12 @@ NO_TWIN_COLUMNS = {
     "sim_knn_lsh": ("query_id", "neighbor_id", "score", "rank"),
     "sim_knn_ivf": ("query_id", "neighbor_id", "score", "rank"),
 }
+
+# The set-up's warm-up pass runs on a second, smaller input set of the
+# same shape (another seed, a quarter of the volume), so that nothing it
+# computes can be reused by the measured passes.
+WARM_SEED_SHIFT = 1_000_001
+WARM_SCALE = 0.25
 
 PIPELINE_TABLES = checks.STATE_TABLES
 END_TO_END = {"wall_s": "s", "op_p50_s": "s", "cpu_s": "s", "setup_s": "s"}
@@ -131,42 +136,51 @@ class Bench:
         self.errors: list[str] = []
         self.record: dict = {"workload": args.workload, "seed": args.seed, "trace": args.trace}
         t = now()
-        self.data_dir = str(work / "data")
-        self.parquet_bytes = gen.fixtures(self.data_dir, args.seed, self.wl["sf"], self.wl["factor"])
-        inputs = {"sf": self.wl["sf"], "factor": self.wl["factor"],
-                  "parquet_bytes": self.parquet_bytes}
-        self.landed_bytes = 0
+        self.inputs = self.make_inputs(work / "data", args.seed, 1)
+        self.data_dir = self.inputs["data_dir"]
+        self.warm_inputs = self.make_inputs(work / "warm", args.seed + WARM_SEED_SHIFT, WARM_SCALE)
         if self.etl:
-            # under data_dir, so get_spark sizes the session on all inputs
-            self.landing = gen.tmdb(f"{self.data_dir}/landing", args.seed, self.wl["pages"],
-                                    self.wl["batches"], self.wl["batch_pages"])
-            steps = self.landing["steps"]
+            steps = self.inputs["landing"]["steps"]
             self.etl_names = ["initial"] + [f"batch{i}" for i in range(1, len(steps))]
+        self.record["inputs"] = self.inputs["summary"]
+        self.record["input_generation_s"] = now() - t
+
+    def make_inputs(self, path: Path, seed: int, scale: float) -> dict:
+        """One input set, ``scale`` times the workload's volume: the
+        fixture tables and, for the ETL, the landed JSON under
+        ``<path>/landing``, so get_spark sizes the session on all of it."""
+        wl, data_dir = self.wl, str(path)
+        sf = wl["sf"] * scale
+        parquet_bytes = gen.fixtures(data_dir, seed, sf, wl["factor"])
+        inp = {"data_dir": data_dir, "parquet_bytes": parquet_bytes, "landed_bytes": 0,
+               "summary": {"sf": sf, "factor": wl["factor"], "parquet_bytes": parquet_bytes}}
+        if self.etl:
+            landing = gen.tmdb(f"{data_dir}/landing", seed, max(1, round(wl["pages"] * scale)),
+                               wl["batches"], max(1, round(wl["batch_pages"] * scale)))
+            steps = landing["steps"]
+            inp["landing"] = landing
             # the rerun reads the last batch again
-            self.landed_bytes = sum(s["landed_bytes"] for s in steps + steps[-1:])
-            inputs["landed_json_bytes"] = sum(s["landed_bytes"] for s in steps)
-            inputs["rows_after_each_step"] = [
+            inp["landed_bytes"] = sum(s["landed_bytes"] for s in steps + steps[-1:])
+            inp["summary"]["landed_json_bytes"] = sum(s["landed_bytes"] for s in steps)
+            inp["summary"]["rows_after_each_step"] = [
                 {k: v for k, v in s["expect"].items() if k != "titles"} for s in steps
             ]
-        self.record["inputs"] = inputs
-        self.record["input_generation_s"] = now() - t
+        return inp
 
     # -- set-up --------------------------------------------------------
     def setup(self) -> None:
-        """Set the session up SETUPS times: get_spark on the workload's
-        inputs, then a generic warm-up. setup_s is the median."""
+        """get_spark on the workload's inputs SETUPS times (the SparkContext
+        is stopped in between; the JVM stays), then one warm-up pass.
+        setup_s is the median get_spark plus the warm-up pass."""
         from movie_data_etl_pipeline_spark.session import get_spark
 
-        get_s, warm_s = [], []
+        get_s = []
         for _ in range(SETUPS):
             if self.spark is not None:
                 self.spark.stop()
             t0 = now()
             self.spark = get_spark("perfbench", data_dir=self.data_dir)
-            t1 = now()
-            self.warmup()
-            get_s.append(t1 - t0)
-            warm_s.append(now() - t1)
+            get_s.append(now() - t0)
         sc = self.spark.sparkContext
         self.cores = sc.defaultParallelism
         self.record["conf"] = {
@@ -175,33 +189,39 @@ class Bench:
             "shuffle_partitions": int(self.spark.conf.get("spark.sql.shuffle.partitions")),
             "driver_memory": sc.getConf().get("spark.driver.memory"),
         }
-        self.record["setups"] = [{"get_spark_s": g, "warmup_s": w} for g, w in zip(get_s, warm_s)]
-        self.get_spark_s, self.warmup_s = statistics.median(get_s), statistics.median(warm_s)
-        self.setup_s = statistics.median(g + w for g, w in zip(get_s, warm_s))
+        self.get_spark_s = statistics.median(get_s)
+        self.warmup_s = self.warmup()
+        self.record.update(get_spark_s=get_s, warmup_s=self.warmup_s)
+        self.setup_s = self.get_spark_s + self.warmup_s
 
-    def warmup(self) -> None:
-        """JVM and codegen (a small join and aggregate) and the Python
-        worker pool (an Arrow map over every core)."""
-        spark = self.spark
-        df = spark.range(20_000).selectExpr("id % 97 AS k", "id AS v")
-        df.join(df.groupBy("k").count(), "k").groupBy("count").sum("v").collect()
-        spark.range(4_000, numPartitions=spark.sparkContext.defaultParallelism).mapInArrow(
-            lambda batches: batches, "id long"
-        ).collect()
+    def warmup(self) -> float:
+        """One pass of the workload's ops on the warm-up input set: the
+        JVM's JIT and Spark's codegen cache warm up on the ops' own code
+        shapes, and the Python worker pool starts for the ops that use it.
+        Returns its seconds; an op that raises here is an error of the
+        run."""
+        out = self.work / "out" / "warm"
+        t0 = now()
+        results, _ = self.run_pass(self.spark.newSession(), self.warm_inputs, out, None, "w")
+        seconds = now() - t0
+        self.record["warmup_ops"] = {op: s for op, s, _ in results}
+        self.errors += [f"warm-up {op}: {res}" for op, _, res in results if isinstance(res, str)]
+        shutil.rmtree(out, ignore_errors=True)
+        return seconds
 
     # -- ops -------------------------------------------------------------
-    def run_op(self, sess, op: str, trace: list | None):
+    def run_op(self, sess, op: str, data_dir: str, trace: list | None, tag: str):
         """Build the op's DataFrame and collect it; traced, also split
         build, planning and execution and read their jobs' metrics."""
         from movie_data_etl_pipeline_spark.plans.fixture_queries import QUERIES
 
         if trace is None:
-            return QUERIES[op](sess, self.data_dir).toArrow()
+            return QUERIES[op](sess, data_dir).toArrow()
         sc = sess.sparkContext
-        gid = f"pb{len(trace)}"
+        gid = f"pb{tag}.{len(trace)}"
         sc.setJobGroup(f"{gid}b", op)
         t0 = now()
-        df = QUERIES[op](sess, self.data_dir)
+        df = QUERIES[op](sess, data_dir)
         t1 = now()
         sc.setJobGroup(f"{gid}x", op)
         df._jdf.queryExecution().executedPlan()
@@ -217,7 +237,7 @@ class Bench:
         })
         return out
 
-    def etl_step(self, sess, step: dict, state_in: str | None, out: str, trace, write_s):
+    def etl_step(self, sess, step: dict, state_in: str | None, out: str, trace, tag, write_s):
         """One pipeline run: read the landed batch (and the state it
         merges into), then write the five tables to a fresh directory.
         Planning happens inside each write, so it is not split out."""
@@ -235,7 +255,7 @@ class Bench:
             existing=existing,
         )
         for t in PIPELINE_TABLES:
-            gid = f"pb{len(trace)}w" if trace is not None else None
+            gid = f"pb{tag}.{len(trace)}w" if trace is not None else None
             if gid:
                 sess.sparkContext.setJobGroup(gid, t)
             t0 = now()
@@ -248,11 +268,12 @@ class Bench:
                 trace.append({"op": f"write_{t}", "exec_s": t1 - t0, "probe_s": now() - t1,
                               **totals})
 
-    def run_pass(self, sess, out: Path, trace) -> tuple[list, dict]:
-        """Run every op once. Returns ([(op, seconds, output or error)],
-        per-table write seconds). The ETL ops are the initial load, each
-        incremental batch and a rerun of the last batch; their states
-        stay under ``out`` for the checks."""
+    def run_pass(self, sess, inp: dict, out: Path, trace, tag: str) -> tuple[list, dict]:
+        """Run every op once on the input set ``inp``. Returns ([(op,
+        seconds, output or error)], per-table write seconds). The ETL ops
+        are the initial load, each incremental batch and a rerun of the
+        last batch; their states stay under ``out`` for the checks.
+        ``tag`` keeps the traced job groups of different passes apart."""
         results, write_s = [], dict.fromkeys(PIPELINE_TABLES, 0.0)
 
         def timed(name, fn):
@@ -264,13 +285,13 @@ class Bench:
             results.append((name, now() - t0, res))
 
         if self.etl:
-            steps, names = self.landing["steps"], self.etl_names
+            steps, names = inp["landing"]["steps"], self.etl_names
             plan = list(zip(names, steps, [None] + names)) + [("rerun", steps[-1], names[-1])]
             for name, step, prev in plan:
                 timed(name, lambda: self.etl_step(
-                    sess, step, prev and str(out / prev), str(out / name), trace, write_s))
+                    sess, step, prev and str(out / prev), str(out / name), trace, tag, write_s))
         for op in self.wl["ops"]:
-            timed(op, lambda: self.run_op(sess, op, trace))
+            timed(op, lambda: self.run_op(sess, op, inp["data_dir"], trace, tag))
         return results, write_s
 
     # -- checks ----------------------------------------------------------
@@ -295,7 +316,7 @@ class Bench:
         reasons = []
         states = {}
         if self.etl:
-            steps = self.landing["steps"]
+            steps = self.inputs["landing"]["steps"]
             for (name, _, res), step in zip(results, steps + steps[-1:]):
                 if res is not None:
                     reasons.append(res)
@@ -331,7 +352,7 @@ class Bench:
         out = self.work / "out" / f"pass{k}"
         cpu0, wcpu0 = probe.tree_cpu()
         t0 = now()
-        results, write_s = self.run_pass(sess, out, trace)
+        results, write_s = self.run_pass(sess, self.inputs, out, trace, str(k))
         wall = now() - t0
         cpu1, wcpu1 = probe.tree_cpu()
         # untimed from here
@@ -349,9 +370,9 @@ class Bench:
         return p
 
     def measure(self) -> list[dict]:
-        """Whole passes until they have taken --seconds. The first runs on
-        a JVM that has had only the generic warm-up, as a batch job's
-        does. Traced runs trace every pass."""
+        """Whole passes until they have taken --seconds, each on the
+        measured inputs after the set-up's warm-up pass. Traced runs trace
+        every pass."""
         passes, spent = [], 0.0
         while spent < self.args.seconds:
             passes.append(self.one_pass(len(passes) + 1, traced=bool(self.args.trace)))
@@ -362,7 +383,8 @@ class Bench:
     def end_to_end(self, passes: list[dict]) -> dict:
         return {
             "wall_s": statistics.median(p["wall_s"] for p in passes),
-            "op_p50_s": statistics.median(o["s"] for p in passes for o in p["ops"]),
+            "op_p50_s": statistics.median(
+                statistics.median(o["s"] for o in p["ops"]) for p in passes),
             "cpu_s": statistics.median(p["cpu_s"] for p in passes),
             "setup_s": self.setup_s,
         }
@@ -373,6 +395,7 @@ class Bench:
         total = lambda key: sum(o.get(key, 0) for o in ops)  # noqa: E731
         lat = {o["op"]: o["s"] for o in traced["ops"]}
         write_s, written = traced["write_s"], traced["bytes_written"]
+        landed = self.inputs["landed_bytes"]
         mem = self.record["conf"]["driver_memory"]
         self.self_check(traced)
         return {
@@ -388,11 +411,11 @@ class Bench:
             "spark.exec_s": total("exec_s"),
             **{f"spark.{k}": total(k) for k in SPARK_TOTALS},
             "spark.core_busy_frac": total("task_run_s") / (total("exec_s") * self.cores),
-            "sources.input_bytes": self.parquet_bytes + self.landed_bytes,
+            "sources.input_bytes": self.inputs["parquet_bytes"] + landed,
             "sources.write_s": sum(write_s.values()),
             "sources.bytes_written": written,
             "sources.files_written": traced["files_written"],
-            "sources.write_amp": written / self.landed_bytes if self.etl else 0.0,
+            "sources.write_amp": written / landed if self.etl else 0.0,
             "pipeline.initial_s": lat.get("initial", 0.0),
             "pipeline.incremental_s": sum(v for k, v in lat.items() if k.startswith("batch")),
             "pipeline.rerun_s": lat.get("rerun", 0.0),
@@ -440,16 +463,21 @@ class Bench:
         }
 
     def close(self) -> None:
-        """Stop Spark and wait for the JVM (and its Python workers) to exit."""
+        """Stop Spark and wait for the JVM (and its Python workers) to exit,
+        also when a signal cut a call into the JVM short and left the
+        gateway connection unusable."""
         from pyspark import SparkContext
 
         gateway = SparkContext._gateway
-        if self.spark is not None:
-            self.spark.stop()
+        try:
+            if self.spark is not None:
+                self.spark.stop()
+        except Exception as e:  # noqa: BLE001
+            print(f"perfbench: stopping Spark failed: {e}", file=sys.stderr)
         if gateway is None:
             return
         proc = getattr(gateway, "proc", None)
-        gateway.shutdown()
+        gateway.shutdown()  # does not raise
         if proc is not None:
             proc.stdin.close()
             try:
@@ -489,9 +517,12 @@ def main(argv=None) -> int:
         bench = Bench(args, work)
         result = bench.run()
     finally:
-        if bench is not None:
-            bench.close()
-        shutil.rmtree(work, ignore_errors=True)
+        signal.signal(signal.SIGTERM, signal.SIG_IGN)  # let the cleanup finish
+        try:
+            if bench is not None:
+                bench.close()
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
     print(json.dumps(result))
     return 0
 
