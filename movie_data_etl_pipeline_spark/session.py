@@ -13,51 +13,55 @@ transfer for the pandas-UDF slow path.
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
 
-def data_scaled_shuffle_partitions(data_dir: str, cpus: int, scale: int = 1) -> int:
+def _dir_bytes(data_dir: str) -> int:
+    """Apparent size of every file under ``data_dir`` (0 when it is
+    missing). Every file counts, not only parquet: a session that will
+    serve raw landed JSON (perfbench's ``reference`` workload sizes its
+    session on the landing zone it ingests) is sized on those bytes too."""
+    total = 0
+    for root, _dirs, files in os.walk(data_dir):
+        for f in files:
+            try:
+                total += os.path.getsize(os.path.join(root, f))
+            except OSError:
+                pass
+    return total
+
+
+def data_scaled_shuffle_partitions(data_bytes: int, cpus: int) -> int:
     """Self-sizing shuffle-partition count (guide §2.2/§5): derive the
     initial partition count from the INPUT VOLUME instead of pinning it
     to the local core count. A fixed count makes per-task aggregate /
     sort state grow linearly with data — the class that killed the
     graph-family shared build with AGGREGATE_OUT_OF_MEMORY at 100×
-    under 32 partitions while 96–128 ran clean (OPTIMIZATION_r10.md);
-    in r10 the fix was an env knob the 100× tooling had to remember to
-    set, in r11 the default derives itself (VERDICT-r10 ask #4).
+    under 32 partitions while 96–128 ran clean (OPTIMIZATION_r10.md).
 
-    Sizing: total compressed parquet bytes under ``data_dir``, one
-    partition per 16 MiB compressed. The fixtures are zstd/snappy
-    parquet that decompress ~8× into in-memory rows, so this targets
-    ≈128 MiB of raw per-task state (guide §2.2's 100 MB–1 GB band),
-    floored at the core count (never fewer tasks than cores) and
-    clamped at 4096 (beyond that, block-count quadratics dominate —
-    guide §2.2 — and a real cluster should size explicitly). At sf0.1
-    (~17 MB) this derives exactly ``cpus`` — bit-identical session conf
-    to every earlier round, so bench numbers stay comparable; at the
-    100× fixtures (~1.6 GB) it derives ~96, the measured-clean value.
-    AQE coalescing (enabled below) right-sizes small exchanges DOWN at
-    runtime, so the only cost of over-deriving is scheduler overhead
-    that coalescing removes. ``scale`` multiplies the measured bytes —
-    the amplified-scale tools pass their factor when sizing a session
+    Sizing: ``data_bytes`` (the bytes of every file under the session's
+    data dir, see ``_dir_bytes``), one partition per 16 MiB. The
+    fixtures are zstd/snappy parquet that decompress ~8× into in-memory
+    rows, so this targets ≈128 MiB of raw per-task state (guide §2.2's
+    100 MB–1 GB band), floored at the core count (never fewer tasks than
+    cores) and clamped at 4096 (beyond that, block-count quadratics
+    dominate — guide §2.2 — and a real cluster should size explicitly).
+    At sf0.1 (~17 MB) this derives exactly ``cpus`` — bit-identical
+    session conf to every earlier round, so bench numbers stay
+    comparable; at the 100× fixtures (~1.6 GB) it derives ~96, the
+    measured-clean value. AQE coalescing (enabled below) right-sizes
+    small exchanges DOWN at runtime, so the only cost of over-deriving
+    is scheduler overhead that coalescing removes. The amplified-scale
+    tools pass the base bytes times their factor when sizing a session
     that will WRITE the amplified fixtures before querying them (the
     conf is fixed at session build, so the derivation must anticipate
     the post-amplify volume)."""
-    total = 0
-    try:
-        for root, _dirs, files in os.walk(data_dir):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    except OSError:
-        pass
-    return max(cpus, min(4096, (total * scale) // (16 * 1024 * 1024)))
+    return max(cpus, min(4096, data_bytes // (16 * 1024 * 1024)))
 
 
-def data_scaled_driver_memory(data_dir: str, cpus: int, scale: int = 1) -> str:
+def data_scaled_driver_memory(data_bytes: int, ram_bytes: int | None = None) -> str:
     """Self-sizing local-mode heap (guide §5): in ``local[N]`` the
     driver JVM IS the executor — all N concurrent tasks share its
     heap — so a heap pinned at 8g makes total execution memory
@@ -66,32 +70,51 @@ def data_scaled_driver_memory(data_dir: str, cpus: int, scale: int = 1) -> str:
     gr_link_prediction even at the derived 95 shuffle partitions
     (r11 sweep log), while 20g runs the family clean (r10 record).
 
-    Sizing: compressed parquet bytes × 12 (≈8× zstd decompression into
-    row/aggregate state plus ~1.5× execution headroom), floored at the
-    8g every bench round has used — at sf0.1 the derivation lands
-    exactly there, so the bench session conf is bit-identical to
-    previous rounds — and capped at half the machine's RAM. Explicit
-    ``SPARK_GRAFT_DRIVER_MEM`` still wins. On a real cluster executor
-    memory is provisioned per node and this local-mode heuristic is
-    moot (set executor/overhead sizes explicitly, guide §5)."""
-    total = 0
-    try:
-        for root, _dirs, files in os.walk(data_dir):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    except OSError:
-        pass
-    try:
-        with open("/proc/meminfo") as fh:
-            mem_kb = int(fh.readline().split()[1])
-        half_ram_gb = max(8, mem_kb // (2 * 1024 * 1024))
-    except (OSError, ValueError, IndexError):
-        half_ram_gb = 8
-    need_gb = -(-(total * scale * 12) // (1024**3))  # ceil
-    return f"{max(8, min(half_ram_gb, need_gb))}g"
+    Sizing: ``data_bytes`` (every file under the data dir, see
+    ``_dir_bytes``) × 12 (≈8× zstd decompression into row/aggregate
+    state plus ~1.5× execution headroom), floored at the 8g every bench
+    round has used — at sf0.1 the derivation lands exactly there, so the
+    bench session conf is bit-identical to previous rounds — and then
+    capped at half the host's RAM, to the nearest GiB, so a host under
+    16 GB gets less than 8g (MemTotal excludes kernel-reserved memory,
+    so a 16 GB host reports ~15.7 GiB and keeps 8g). ``ram_bytes``
+    defaults to ``/proc/meminfo``'s MemTotal; when that is unreadable
+    the cap is 8g. Explicit ``SPARK_GRAFT_DRIVER_MEM`` still wins (see
+    ``resolve_session_conf``). On a real cluster executor memory is
+    provisioned per node and this local-mode heuristic is moot (set
+    executor/overhead sizes explicitly, guide §5)."""
+    if ram_bytes is None:
+        try:
+            with open("/proc/meminfo") as fh:
+                ram_bytes = int(fh.readline().split()[1]) * 1024
+        except (OSError, ValueError, IndexError):
+            pass
+    half_ram_gb = 8 if ram_bytes is None else max(1, round(ram_bytes / 2 / 1024**3))
+    need_gb = -(-(data_bytes * 12) // (1024**3))  # ceil
+    return f"{min(half_ram_gb, max(8, need_gb))}g"
+
+
+def resolve_session_conf(
+    env: Mapping[str, str],
+    data_bytes: int,
+    cpus: int,
+    shuffle_partitions: int | None = None,
+) -> tuple[int, str]:
+    """``(shuffle_partitions, driver_memory)`` for a session serving
+    ``data_bytes`` of input. Priority: explicit argument > env knob
+    (``SPARK_GRAFT_SHUFFLE_PARTITIONS`` / ``SPARK_GRAFT_DRIVER_MEM``,
+    kept from r10 — amplified-scale and production tooling may still
+    pin them) > data-scaled derivation. The r10 interleaved 32-vs-96
+    A/B over the frozen CORE_R2 workload measured 3×cores 11% SLOWER at
+    sf0.1 (tools/ab_r10_shuffle.json), so the derivation intentionally
+    lands on = cores at bench volume and only grows with data."""
+    if shuffle_partitions is None:
+        knob = env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+        shuffle_partitions = (
+            int(knob) if knob is not None else data_scaled_shuffle_partitions(data_bytes, cpus)
+        )
+    driver_mem = env.get("SPARK_GRAFT_DRIVER_MEM") or data_scaled_driver_memory(data_bytes)
+    return shuffle_partitions, driver_mem
 
 
 def get_spark(
@@ -105,29 +128,19 @@ def get_spark(
     (= the local core count at bench scale) — at cluster scale you
     would instead size it to ~2-3× total executor cores, or simply rely
     on AQE's coalescing (enabled here) to right-size every exchange at
-    runtime. ``data_dir`` tells the derivation which fixture set this
-    session will serve when it is not ``$SPARK_GRAFT_SF_DIR`` (the
-    amplified-scale tools pass their /tmp/scalebench_xN dir).
+    runtime. ``data_dir`` tells the derivation which data this session
+    will serve when it is not ``$SPARK_GRAFT_SF_DIR`` (the
+    amplified-scale tools pass their /tmp/scalebench_xN dir; perfbench
+    passes its generated inputs, landed JSON included); every file
+    under it counts toward the sizing.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     resolved_dir = data_dir or os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
-    if shuffle_partitions is None:
-        # Priority: explicit env knob (kept from r10 — amplified-scale
-        # and production tooling may still pin it) > data-scaled
-        # derivation. The r10 interleaved 32-vs-96 A/B over the frozen
-        # CORE_R2 workload measured 3×cores 11% SLOWER at sf0.1
-        # (tools/ab_r10_shuffle.json), so the derivation intentionally
-        # lands on = cores at bench volume and only grows with data.
-        env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-        if env is not None:
-            shuffle_partitions = int(env)
-        else:
-            shuffle_partitions = data_scaled_shuffle_partitions(resolved_dir, cpus)
-    driver_mem = os.environ.get(
-        "SPARK_GRAFT_DRIVER_MEM"
-    ) or data_scaled_driver_memory(resolved_dir, cpus)
+    shuffle_partitions, driver_mem = resolve_session_conf(
+        os.environ, _dir_bytes(resolved_dir), cpus, shuffle_partitions
+    )
     # default is local mode sized to the machine; on a cluster set
     # SPARK_GRAFT_MASTER (yarn / k8s://... / spark://...) — or submit
     # via spark-submit --master, which wins over any builder setting —

@@ -16,9 +16,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import duckdb
 import pandas as pd
 
-import __spark_entry__ as entrymod
-from movie_data_etl_pipeline_spark.session import get_spark
-
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
@@ -34,6 +31,9 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main() -> int:
+    import __spark_entry__ as entrymod
+    from movie_data_etl_pipeline_spark.session import get_spark
+
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and "/" in sys.argv[1] else "/root/testdata/sf0.01"
     only = [a for a in sys.argv[1:] if "/" not in a]
     spark = get_spark("crosscheck")

@@ -30,6 +30,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from movie_data_etl_pipeline_spark.plans import fixture_queries as FQ
 from movie_data_etl_pipeline_spark.session import (
+    _dir_bytes,
     data_scaled_driver_memory,
     data_scaled_shuffle_partitions,
     get_spark,
@@ -63,13 +64,12 @@ def main() -> None:
         _cpus = int(_os.environ.get("SPARK_GRAFT_CPUS", _os.cpu_count() or 8))
         _base = _os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
         if _os.path.exists(_os.path.join(sf_dir, "_done")):
-            _parts = data_scaled_shuffle_partitions(sf_dir, _cpus)
-            _mem = data_scaled_driver_memory(sf_dir, _cpus)
+            _bytes = _dir_bytes(sf_dir)
         else:
-            _parts = data_scaled_shuffle_partitions(_base, _cpus, scale=factor)
-            _mem = data_scaled_driver_memory(_base, _cpus, scale=factor)
+            _bytes = _dir_bytes(_base) * factor
+        _parts = data_scaled_shuffle_partitions(_bytes, _cpus)
         _os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"] = str(_parts)
-        _os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _mem)
+        _os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", data_scaled_driver_memory(_bytes))
     # fail fast on missing fixtures — every query would otherwise
     # "fail" with PATH_NOT_FOUND and the sweep would burn 20 minutes
     # producing a garbage record (run tools/scalebench.py first, or

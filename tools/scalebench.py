@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from movie_data_etl_pipeline_spark.plans import fixture_queries as FQ
 from movie_data_etl_pipeline_spark.session import (
+    _dir_bytes,
     data_scaled_driver_memory,
     data_scaled_shuffle_partitions,
     get_spark,
@@ -223,13 +224,12 @@ def main() -> None:
     if "SPARK_GRAFT_SHUFFLE_PARTITIONS" not in os.environ:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
         if os.path.exists(os.path.join(amp_dir, "_done")):
-            parts = data_scaled_shuffle_partitions(amp_dir, cpus)
-            mem = data_scaled_driver_memory(amp_dir, cpus)
+            data_bytes = _dir_bytes(amp_dir)
         else:
-            parts = data_scaled_shuffle_partitions(base_dir, cpus, scale=factor)
-            mem = data_scaled_driver_memory(base_dir, cpus, scale=factor)
+            data_bytes = _dir_bytes(base_dir) * factor
+        parts = data_scaled_shuffle_partitions(data_bytes, cpus)
         os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"] = str(parts)
-        os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", mem)
+        os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", data_scaled_driver_memory(data_bytes))
     spark = get_spark("scalebench")
     amplify(spark, base_dir, amp_dir, factor)
     # warmup both directions (JVM/codegen/footers)
